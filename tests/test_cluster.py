@@ -121,34 +121,6 @@ class TestConnectedComponents:
         assert got["img-007"] == "img-007"  # isolated
 
 
-class TestStarImplEquivalence:
-    def test_window_equals_agg_on_random_graphs(self, spark):
-        """Both star implementations must produce identical components
-        on random graphs (incl. chains and hub stars mixed in)."""
-        rng = np.random.default_rng(23)
-        n = 200
-        edges = [tuple(sorted(p)) for p in rng.integers(0, n, (160, 2)) if p[0] != p[1]]
-        edges += [(i, i + 1) for i in range(100, 140)]  # chain
-        edges += [(150, j) for j in range(151, 180)]  # hub star
-        e = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "id_a BIGINT, id_b BIGINT"
-        )
-        w = {
-            r.node: r.component
-            for r in connected_components(e, star_impl="window").collect()
-        }
-        a = {
-            r.node: r.component
-            for r in connected_components(e, star_impl="agg").collect()
-        }
-        assert w == a == _union_find(edges)
-
-    def test_bad_impl_raises(self, spark):
-        e = spark.createDataFrame([(1, 2)], "id_a BIGINT, id_b BIGINT")
-        with pytest.raises(ValueError, match="star_impl"):
-            connected_components(e, star_impl="nope")
-
-
 class TestPreContraction:
     def test_pre_contract_equals_plain_on_random_graphs(self, spark):
         rng = np.random.default_rng(23)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 
@@ -830,9 +832,14 @@ class TestViewportFetch:
         )
         assert "PushedFilters: [In(tile_x" in plan
 
-    def test_oversized_viewport_raises(self, spark, wm):
+    @pytest.mark.parametrize("zoom", [12, 18])
+    def test_oversized_viewport_raises(self, spark, wm, zoom):
+        """Whole-world covers are 2^24 (z12) and 2^36 (z18) tiles: the
+        guard must refuse them without enumerating the cover."""
         from tile_grid_spark.operators.vector_tiles import tiles_for_viewport
 
         df = spark.range(1).selectExpr("id as tile_x", "id as tile_y", "1 as n_features")
+        t0 = time.perf_counter()
         with pytest.raises(ValueError, match="lower zoom"):
-            tiles_for_viewport(df, wm, -180.0, -85.0, 180.0, 85.0, 12)
+            tiles_for_viewport(df, wm, -180.0, -85.0, 180.0, 85.0, zoom)
+        assert time.perf_counter() - t0 < 1.0

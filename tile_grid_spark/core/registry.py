@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import functools
 import json
-from typing import Iterable, Optional
+from typing import Iterable
 
 from .model import TmsAlreadyRegistered, TmsNotFound
 from .tms import TileMatrixSet, Tms

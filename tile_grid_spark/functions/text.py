@@ -315,13 +315,6 @@ def compression_ratio_udf():
     return f
 
 
-def fingerprint_md5(text: Column | str, prefix_chars: int | None = None) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    if prefix_chars is not None:
-        c = F.substring(c, 1, prefix_chars)
-    return F.md5(c)
-
-
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Array of n-word shingles (native transform over a token slice).
 
@@ -386,30 +379,12 @@ def source_boilerplate_ngrams(
     )
 
 
-def shingle_hashes(text: Column | str, n: int = 3) -> Column:
-    """64-bit rolling-shingle hashes (xxhash64 over word shingles)."""
-    return F.transform(word_shingles(text, n), lambda s: F.xxhash64(s))
-
-
 # Rabin-Karp-style polynomial base. 255*131^7*(131/130) < 2^63: the whole
 # window hash stays in exact BIGINT arithmetic, so any engine that sums
 # the same 8 integer terms reproduces it bit-for-bit (oracle-able, unlike
 # murmur3/xxhash which are engine-specific).
 ROLLING_BASE = 131
 ROLLING_WINDOW = 8
-
-
-def rolling_fingerprints(text: Column | str, window: int = ROLLING_WINDOW) -> Column:
-    """Array of polynomial rolling hashes over `window`-char slices.
-
-    hash(i) = sum_j ascii(text[i+j]) * BASE^(window-1-j) — classic
-    Rabin-Karp document fingerprinting (winnow by taking array_min
-    downstream). Native Columns only: one split to char codes, then a
-    transform over window start positions.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    codes = F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("long"))
-    return _rolling_from_codes(codes, F.length(c), window)
 
 
 def _rolling_from_codes(codes: Column, text_len: Column, window: int) -> Column:
@@ -433,7 +408,12 @@ def _rolling_from_codes(codes: Column, text_len: Column, window: int) -> Column:
 def with_rolling_fingerprints(
     df: DataFrame, text: str = "text", out: str = "fps", window: int = ROLLING_WINDOW
 ) -> DataFrame:
-    """Staged-projection variant of rolling_fingerprints.
+    """Adds `out`: array of polynomial rolling hashes over
+    `window`-char slices of `text`.
+
+    hash(i) = sum_j ascii(text[i+j]) * BASE^(window-1-j) — classic
+    Rabin-Karp document fingerprinting (winnow by taking array_min
+    downstream). Native Columns only.
 
     Materializes the char-code array, then the window-hash array, as real
     columns. Composing everything into one expression makes Catalyst

@@ -12,8 +12,6 @@ x-middle, y-fastest) when a test needs it; production plans never sort.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -104,38 +102,6 @@ def cover_bbox_geographic(
     return out
 
 
-def cover_bbox_xy(
-    df: DataFrame,
-    tms: Tms,
-    zoom: int,
-    minx: str = "minx",
-    miny: str = "miny",
-    maxx: str = "maxx",
-    maxy: str = "maxy",
-) -> DataFrame:
-    """CRS-space cover with the res/10 inset (tms.rs:785-807)."""
-    p = tms.zoom_params(zoom)
-    inset = F.lit(p.resolution / 10.0)
-    b = tms.xy_bbox()
-    w = F.greatest(F.col(minx), F.lit(b.left)) + inset
-    s = F.greatest(F.col(miny), F.lit(b.bottom)) + inset
-    e = F.least(F.col(maxx), F.lit(b.right)) - inset
-    n = F.least(F.col(maxy), F.lit(b.top)) - inset
-    return (
-        df.withColumn("_ulx", xy_tile_x(w, p))
-        .withColumn("_uly", xy_tile_y(n, p))
-        .withColumn("_lrx", xy_tile_x(e, p))
-        .withColumn("_lry", xy_tile_y(s, p))
-        # inverted range (bbox outside TMS / thinner than the inset) ->
-        # zero tiles, not sequence()'s descending phantom range
-        .filter((F.col("_ulx") <= F.col("_lrx")) & (F.col("_uly") <= F.col("_lry")))
-        .withColumn("tile_x", F.explode(F.sequence(F.col("_ulx"), F.col("_lrx"))))
-        .withColumn("tile_y", F.explode(F.sequence(F.col("_uly"), F.col("_lry"))))
-        .withColumn("zoom", F.lit(zoom))
-        .drop("_ulx", "_uly", "_lrx", "_lry")
-    )
-
-
 def cover_bbox_xy_exact(
     df: DataFrame,
     tms: Tms,
@@ -185,18 +151,6 @@ def cover_bbox_xy_exact(
         .withColumn("zoom", F.lit(zoom))
         .drop("_ulx", "_uly", "_lrx", "_lry")
     )
-
-
-def cover_multizoom(
-    df: DataFrame, tms: Tms, zooms: Sequence[int], geographic: bool = True, **cols
-) -> DataFrame:
-    """Union of per-zoom covers (matches reference per-zoom loop)."""
-    fn = cover_bbox_geographic if geographic else cover_bbox_xy
-    out = None
-    for z in zooms:
-        part = fn(df, tms, z, **cols)
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def enumerate_legacy(spark, grid, extent, tolerance: int, minzoom: int, maxzoom: int) -> DataFrame:

@@ -17,15 +17,13 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..functions.text import shingle_hashes, word_shingles
+from ..functions.text import word_shingles
 
 
 # ---------------------------------------------------------------------------

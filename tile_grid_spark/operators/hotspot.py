@@ -83,19 +83,29 @@ def getis_ord_gi_star(
 
 def gi_star_from_counts(counts: DataFrame, tms: Tms, zoom: int) -> DataFrame:
     """Gi* over a pre-aggregated per-tile count frame (tile_x, tile_y,
-    x) — the maintained-store entry point (streaming twin): the counts
-    may come from any incremental pipeline as long as they are exact
-    integers; identical integers give bit-identical gi, which is what
-    the replay-equals-batch gate asserts. Tiles outside the clamp
-    domain [0, width-1] x [0, height-1] are excluded exactly like the
-    points path."""
+    x) — the entry point for counts aggregated elsewhere (e.g. weighted
+    sums): they must be exact integers; identical integers give
+    bit-identical gi. Tiles outside the clamp domain [0, width-1] x
+    [0, height-1] are excluded exactly like the points path. A NULL x
+    is outside the contract and raises (it would otherwise vanish from
+    the study set through the ring aggregate's center-element test)."""
     p = tms.zoom_params(zoom)
-    counts = counts.filter(
-        (F.col("tile_x") >= 0)
-        & (F.col("tile_y") >= 0)
-        & (F.col("tile_x") <= F.lit(p.matrix_width - 1))
-        & (F.col("tile_y") <= F.lit(p.matrix_height - 1))
-    ).localCheckpoint()  # 2 consumers; never replay the upstream scan
+    counts = (
+        counts.filter(
+            (F.col("tile_x") >= 0)
+            & (F.col("tile_y") >= 0)
+            & (F.col("tile_x") <= F.lit(p.matrix_width - 1))
+            & (F.col("tile_y") <= F.lit(p.matrix_height - 1))
+        )
+        .withColumn(
+            "x",
+            F.when(
+                F.col("x").isNull(),
+                F.raise_error(F.lit("gi_star_from_counts: NULL count x")),
+            ).otherwise(F.col("x")),
+        )
+        .localCheckpoint()  # 2 consumers; never replay the upstream scan
+    )
     g = counts.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),

@@ -40,14 +40,6 @@ def norm_expr(a, dim: int | None = None) -> F.Column:
     return F.sqrt(dot_expr(a, a, dim))
 
 
-def cosine_expr(a, b, dim: int | None = None) -> F.Column:
-    """Exact cosine between two array<double> columns (JVM-side). In a
-    join, prefer precomputing norm_expr per SIDE (once per row, not once
-    per pair) and dividing dot_expr by the product — that is what the
-    operators below do."""
-    return dot_expr(a, b, dim) / (norm_expr(a, dim) * norm_expr(b, dim))
-
-
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,

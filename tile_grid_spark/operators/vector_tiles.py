@@ -18,6 +18,7 @@ zooms first (operators/rollup.py).
 
 from __future__ import annotations
 
+from itertools import islice
 from typing import Iterator
 
 import pandas as pd
@@ -746,44 +747,6 @@ def encode_ring_poly_tiles(
     return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
 
 
-def merge_point_tiles(old: DataFrame, new: DataFrame, layer: str = "points") -> DataFrame:
-    """Upsert-merge two point-MVT tile sets BY FEATURE ID: for each
-    tile, decode both binaries (tags included), let the `new` side win
-    on fid collisions, re-encode sorted by fid. Union + one groupBy-tile
-    exchange (2-row groups); idempotent — re-merging the same `new` set
-    reproduces identical bytes, which is what makes the streaming
-    foreachBatch store refresh safe under at-least-once replay."""
-    tagged = old.select(
-        "tile_x", "tile_y", "mvt", F.lit(0).alias("_side")
-    ).unionByName(new.select("tile_x", "tile_y", "mvt", F.lit(1).alias("_side")))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        feats: dict = {}
-        extent = DEFAULT_EXTENT
-        for _, r in pdf.sort_values("_side").iterrows():
-            (lyr,) = decode_point_tile(bytes(r.mvt), with_attrs=True)["layers"]
-            extent = lyr["extent"]
-            for fid, px, py, a in lyr["features"]:
-                feats[fid] = (px, py, a)
-        fids = sorted(feats)
-        rows = [(f, feats[f][0], feats[f][1]) for f in fids]
-        attrs = [feats[f][2] for f in fids]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(rows)],
-                "mvt": [
-                    encode_point_tile(
-                        rows, layer, extent, attrs=attrs if any(attrs) else None
-                    )
-                ],
-            }
-        )
-
-    return _batched_group_apply(tagged, ["tile_x", "tile_y"], build)
-
-
 def tiles_for_viewport(
     tiles: DataFrame,
     tms: Tms,
@@ -805,13 +768,17 @@ def tiles_for_viewport(
     the exact packed-key IN (grid_cols.tile_key layout) that trims the
     rows the pushable rectangle lets through. Raises if the viewport
     covers more than 4096 tiles — that means the caller wants a lower
-    zoom, not a bigger scan."""
+    zoom, not a bigger scan. The guard stops enumerating at tile 4097,
+    so an oversized request costs no more than an admitted one."""
     from ..functions.grid_cols import tile_key
 
-    cover = list(tms.tiles(west, south, east, north, [zoom], truncate=False))
-    if len(cover) > 4096:
+    cap = 4096
+    cover = list(
+        islice(tms.tiles(west, south, east, north, [zoom], truncate=False), cap + 1)
+    )
+    if len(cover) > cap:
         raise ValueError(
-            f"viewport covers {len(cover)} tiles at z{zoom} — render a "
+            f"viewport covers more than {cap} tiles at z{zoom} — render a "
             "lower zoom (serving reads are screen-sized by construction)"
         )
     if not cover:

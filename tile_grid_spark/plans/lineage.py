@@ -19,7 +19,6 @@ xxhash64 XOR-folds, cheap enough to compute inline with the write.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
