@@ -431,14 +431,14 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
     )
-    e = e.withColumn("norm", norm_expr("emb", 64))
+    e = e.withColumn("norm", norm_expr("emb"))
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), F.col("norm").alias("q_norm")
     )
     c = e.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("c_emb"), F.col("norm").alias("c_norm")
     )
-    dot = dot_expr("q_emb", "c_emb", 64)
+    dot = dot_expr("q_emb", "c_emb")
     pairs = c.crossJoin(F.broadcast(q)).withColumn(
         "sim", dot / (F.col("q_norm") * F.col("c_norm"))
     )
@@ -1670,7 +1670,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id")
     c = e.filter(F.col("vec_id") >= 10).withColumnRenamed("vec_id", "cand_id")
-    return lsh_topk(q, c, k=5, bucket_bits=4, n_probe_flips=4, dim=64).orderBy(
+    return lsh_topk(q, c, k=5, bucket_bits=4, n_probe_flips=4).orderBy(
         "query_id", "rank"
     )
 
@@ -1951,11 +1951,11 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("_emb"),
-    ).withColumn("_n", norm_expr("_emb", 64))  # norm once per ROW, not per pair
+    ).withColumn("_n", norm_expr("_emb"))  # norm once per ROW, not per pair
     return (
         e.alias("l")
         .join(e.alias("r"), F.col("l._id") < F.col("r._id"))
-        .filter(dot_expr("l._emb", "r._emb", 64) / (F.col("l._n") * F.col("r._n")) >= 0.4)
+        .filter(dot_expr("l._emb", "r._emb") / (F.col("l._n") * F.col("r._n")) >= 0.4)
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .orderBy("id_a", "id_b")
     )
@@ -2163,7 +2163,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"), "embedding"
     )
     return ivf_topk(
-        q, c, k=5, nprobe=3, dim=64, centroids=_ivf_fixed_codebook()
+        q, c, k=5, nprobe=3, centroids=_ivf_fixed_codebook()
     ).orderBy("query_id", "rank")
 
 
@@ -3851,7 +3851,7 @@ def oracle_sql() -> dict[str, str]:
         ORDER BY e.event_id
     """
 
-    # same 8-term BIGINT polynomial as functions/text.rolling_fingerprints
+    # same 8-term BIGINT polynomial as functions/text.with_rolling_fingerprints
     _win = 8
     _pows = [131 ** (_win - 1 - j) for j in range(_win)]
     _terms = " + ".join(

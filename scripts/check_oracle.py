@@ -51,6 +51,63 @@ def value_hash(rows, colnames) -> str:
     return h.hexdigest()[:16]
 
 
+def open_oracle(sf_dir: str = SF_DIR):
+    """DuckDB connection with one view per parquet table under sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check_query(spark, con, name: str, qs: dict, oracles: dict,
+                sf_dir: str = SF_DIR) -> tuple[bool, str]:
+    """Run queries()[name] on Spark and oracle_sql()[name] on DuckDB;
+    compare row count, sorted column names and the order-insensitive
+    value hash. Returns (ok, report); a query without oracle SQL is
+    rows-only and ok."""
+    if name not in qs:
+        return False, f"{name}: NOT FOUND"
+    t0 = time.time()
+    sdf = qs[name](spark, sf_dir)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    t1 = time.time()
+    if name not in oracles:
+        return True, f"{name}: rows={len(srows)} (no oracle — rows-only) spark={t1-t0:.1f}s"
+    try:
+        res = con.execute(oracles[name])
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    except Exception as e:
+        return False, f"{name}: ORACLE SQL ERROR: {e}"
+    t2 = time.time()
+    ok_count = len(srows) == len(orows)
+    ok_schema = sorted(c.lower() for c in scols) == sorted(c.lower() for c in ocols)
+    sh = value_hash(srows, [c.lower() for c in scols])
+    oh = value_hash(orows, [c.lower() for c in ocols])
+    ok_hash = sh == oh
+    ok = ok_count and ok_schema and ok_hash
+    report = (
+        f"{name}: {'OK' if ok else 'MISMATCH'} rows={len(srows)}/{len(orows)} "
+        f"schema={'ok' if ok_schema else f'{sorted(scols)} vs {sorted(ocols)}'} "
+        f"hash={'ok' if ok_hash else f'{sh} vs {oh}'} "
+        f"spark={t1-t0:.1f}s duck={t2-t1:.1f}s"
+    )
+    if not ok_hash and ok_count and len(srows) <= 200000:
+        # show first differing rows for debugging
+        order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
+        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i].lower())
+        sset = sorted("|".join(norm_value(r[i]) for i in order) for r in srows)
+        oset = sorted("|".join(norm_value(r[i]) for i in oorder) for r in orows)
+        for a, b in zip(sset, oset):
+            if a != b:
+                report += f"\n  spark: {a}\n  duck : {b}"
+                break
+    return ok, report
+
+
 def main(selected: list[str]) -> int:
     import __spark_entry__ as entrymod
     from tile_grid_spark.plans.session import build_session
@@ -58,63 +115,15 @@ def main(selected: list[str]) -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = selected or list(qs)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
+    con = open_oracle()
     spark = build_session("oracle-check", master="local[8]", shuffle_partitions=8,
                           extra_conf={"spark.ui.enabled": "false"})
 
     failures = 0
     for name in names:
-        if name not in qs:
-            print(f"{name}: NOT FOUND")
-            failures += 1
-            continue
-        t0 = time.time()
-        sdf = qs[name](spark, SF_DIR)
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
-        t1 = time.time()
-        if name not in oracles:
-            print(f"{name}: rows={len(srows)} (no oracle — rows-only) spark={t1-t0:.1f}s")
-            continue
-        try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"{name}: ORACLE SQL ERROR: {e}")
-            failures += 1
-            continue
-        t2 = time.time()
-        ok_count = len(srows) == len(orows)
-        ok_schema = sorted(c.lower() for c in scols) == sorted(c.lower() for c in ocols)
-        sh = value_hash(srows, [c.lower() for c in scols])
-        oh = value_hash(orows, [c.lower() for c in ocols])
-        ok_hash = sh == oh
-        status = "OK" if (ok_count and ok_schema and ok_hash) else "MISMATCH"
-        if status != "OK":
-            failures += 1
-        print(
-            f"{name}: {status} rows={len(srows)}/{len(orows)} "
-            f"schema={'ok' if ok_schema else f'{sorted(scols)} vs {sorted(ocols)}'} "
-            f"hash={'ok' if ok_hash else f'{sh} vs {oh}'} "
-            f"spark={t1-t0:.1f}s duck={t2-t1:.1f}s"
-        )
-        if not ok_hash and ok_count and len(srows) <= 200000:
-            # show first differing rows for debugging
-            order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-            oorder = sorted(range(len(ocols)), key=lambda i: ocols[i].lower())
-            sset = sorted("|".join(norm_value(r[i]) for i in order) for r in srows)
-            oset = sorted("|".join(norm_value(r[i]) for i in oorder) for r in orows)
-            for a, b in zip(sset, oset):
-                if a != b:
-                    print(f"  spark: {a}\n  duck : {b}")
-                    break
+        ok, report = check_query(spark, con, name, qs, oracles)
+        failures += not ok
+        print(report)
     spark.stop()
     print("FAILURES:", failures)
     return 1 if failures else 0

@@ -83,6 +83,58 @@ class TestMvtCodec:
         )
         assert b == expect
 
+    def test_wire_golden_tagged(self):
+        # two tagged features in layer "a", extent 4096 — bytes derived
+        # by hand from the MVT 2.1 + protobuf specs. Keys are first-seen
+        # with each feature's keys sorted (b, k, n); values are first-seen
+        # per (type, value): True, "x", 300, False, -1 ("x" deduped)
+        feats = [(1, 3, 5), (2, 7, 9)]
+        attrs = [{"k": "x", "n": 300, "b": True}, {"k": "x", "n": -1, "b": False}]
+        b = encode_point_tile(feats, "a", 4096, attrs=attrs)
+        expect = bytes(
+            [0x1A, 0x56]            # tile field 3, len 86 (layer below)
+            + [0x78, 0x02]          # layer: version=2
+            + [0x0A, 0x01, 0x61]    # name "a"
+            + [0x28, 0x80, 0x20]    # extent 4096
+            + [0x1A, 0x01, 0x62]    # key 0 "b"
+            + [0x1A, 0x01, 0x6B]    # key 1 "k"
+            + [0x1A, 0x01, 0x6E]    # key 2 "n"
+            + [0x22, 0x02, 0x38, 0x01]          # value 0: bool true
+            + [0x22, 0x03, 0x0A, 0x01, 0x78]    # value 1: string "x"
+            + [0x22, 0x03, 0x20, 0xAC, 0x02]    # value 2: int64 300
+            + [0x22, 0x02, 0x38, 0x00]          # value 3: bool false
+            + [0x22, 0x0B, 0x20] + [0xFF] * 9 + [0x01]  # value 4: int64 -1
+            + [0x12, 0x11]          # feature, len 17
+            + [0x08, 0x01]          # id 1
+            + [0x12, 0x06, 0x00, 0x00, 0x01, 0x01, 0x02, 0x02]  # tags b=0 k=1 n=2
+            + [0x18, 0x01]          # type POINT
+            + [0x22, 0x03, 0x09, 0x06, 0x0A]    # geometry [9, zz(3), zz(5)]
+            + [0x12, 0x11]          # feature, len 17
+            + [0x08, 0x02]          # id 2
+            + [0x12, 0x06, 0x00, 0x03, 0x01, 0x01, 0x02, 0x04]  # tags b=3 k=1 n=4
+            + [0x18, 0x01]          # type POINT
+            + [0x22, 0x03, 0x09, 0x0E, 0x12]    # geometry [9, zz(7), zz(9)]
+        )
+        assert b == expect
+        (layer,) = decode_point_tile(b, with_attrs=True)["layers"]
+        assert layer["features"] == [f + (a,) for f, a in zip(feats, attrs)]
+
+    def test_span_overrunning_parent_raises(self):
+        # the layer-name length byte (offset 5) grows from 3 to 4: the
+        # name then swallows the extent key and every later field is
+        # misaligned, ending in a span that runs past the layer's end
+        b = bytearray(encode_point_tile([(1, 3, 5), (2, 7, 9)], "abc", 4096))
+        assert b[5] == 3
+        b[5] = 4
+        with pytest.raises(ValueError, match="past the end"):
+            decode_point_tile(bytes(b))
+        # a fixed32 field whose 4 bytes run past the end of the layer
+        b = bytearray(encode_point_tile([(1, 3, 5)], "a", 4096))
+        extra = bytes([0x5D, 0x00, 0x00])  # field 11, wire 5, 2 of 4 bytes
+        spliced = bytes([0x1A, b[1] + len(extra)]) + bytes(b[2:]) + extra
+        with pytest.raises(ValueError, match="past the end"):
+            decode_point_tile(spliced)
+
     def test_varint_zigzag(self):
         assert _varint(0) == b"\x00"
         assert _varint(300) == b"\xac\x02"

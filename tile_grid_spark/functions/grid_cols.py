@@ -17,7 +17,7 @@ Formula sources (reference, reproduced exactly):
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +46,20 @@ def mercator_y(lat: ColumnOrName) -> Column:
     return F.lit(SEMI_MAJOR_METRE) * F.log(
         F.tan(F.lit(math.pi * 0.25) + F.lit(0.5) * F.radians(_col(lat)))
     )
+
+
+def lonlat_to_grid(
+    tms: Tms, caller: str
+) -> tuple[Callable[[ColumnOrName], Column], Callable[[ColumnOrName], Column]]:
+    """(to_x, to_y): geographic lon/lat -> the TMS CRS, for the two CRSs
+    the Column path supports — forward Mercator for EPSG:3857, identity
+    for EPSG:4326. Any other CRS raises, naming `caller`."""
+    srid = tms.crs().as_srid()
+    if srid == 3857:
+        return mercator_x, mercator_y
+    if srid == 4326:
+        return _col, _col
+    raise ValueError(f"{caller} supports EPSG:3857/4326 TMS, got {tms.crs()}")
 
 
 def inv_mercator_lon(x: ColumnOrName) -> Column:
@@ -108,13 +122,8 @@ def with_tile(
     radians/ln/tan (codegen does not CSE across when() branches).
     """
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        staged = df.withColumns({"_gx": mercator_x(lon), "_gy": mercator_y(lat)})
-    elif srid == 4326:
-        staged = df.withColumns({"_gx": _col(lon), "_gy": _col(lat)})
-    else:
-        raise ValueError(f"with_tile supports EPSG:3857/4326 TMS, got {tms.crs()}")
+    to_x, to_y = lonlat_to_grid(tms, "with_tile")
+    staged = df.withColumns({"_gx": to_x(lon), "_gy": to_y(lat)})
     return staged.withColumns(
         {out_x: xy_tile_x(F.col("_gx"), p), out_y: xy_tile_y(F.col("_gy"), p)}
     ).drop("_gx", "_gy")
@@ -178,13 +187,8 @@ def with_tiles_multizoom(
     Output gains `zoom, tile_x, tile_y`; row count multiplies by
     len(zooms) by design.
     """
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        staged = df.withColumns({"_gx": mercator_x(lon), "_gy": mercator_y(lat)})
-    elif srid == 4326:
-        staged = df.withColumns({"_gx": _col(lon), "_gy": _col(lat)})
-    else:
-        raise ValueError(f"multizoom assignment supports EPSG:3857/4326, got {tms.crs()}")
+    to_x, to_y = lonlat_to_grid(tms, "multizoom assignment")
+    staged = df.withColumns({"_gx": to_x(lon), "_gy": to_y(lat)})
 
     params = [tms.zoom_params(z) for z in zooms]
     if any(p.matrix_width >= 2**53 for p in params):

@@ -1,4 +1,4 @@
-"""Mapbox Vector Tile encoder/decoder (point layers) — from scratch.
+"""Mapbox Vector Tile codec (point, line, polygon layers) — from scratch.
 
 The reference enumerates and addresses tiles (/root/reference/src/tms.rs)
 but never fills them; a tiling ENGINE must also produce the payloads.
@@ -12,7 +12,8 @@ command stream), one layer per tile, plus the spec's TAG dictionaries
 on point layers (layer-level key/value tables + per-feature packed
 (key_idx, value_idx) pairs; string/int64/double/bool values). The
 decoder is a tolerant minimal protobuf walker (unknown fields skipped
-by wire type) so tests can feed it foreign streams.
+by wire type) so tests can feed it foreign streams; a field that runs
+past the end of its enclosing message raises.
 
 Wire layout (MVT 2.1):
   Tile:    field 3 = repeated Layer (len-delimited)
@@ -24,12 +25,15 @@ Wire layout (MVT 2.1):
   LineString part: MoveTo(1) + LineTo(n-1), NO ClosePath; a feature may
   carry several parts (MULTILINESTRING is the same stream repeated).
   Polygon ring: MoveTo(1) + LineTo(n-1) + ClosePath(1); deltas are
-  CUMULATIVE — the cursor persists across rings and features. Vertices
+  CUMULATIVE — the cursor persists across the rings/parts of a feature
+  and restarts at (0, 0) per feature. Vertices
   may lie outside [0, extent) (clip-buffer semantics renderers rely on);
   exterior rings wind clockwise in the y-down tile frame.
 """
 
 from __future__ import annotations
+
+import struct
 
 DEFAULT_EXTENT = 4096
 
@@ -73,65 +77,31 @@ def _encode_value(v) -> bytes:
     if isinstance(v, int):
         return _key(4, 0) + _varint(v & 0xFFFFFFFFFFFFFFFF)
     if isinstance(v, float):
-        import struct
-
         return _key(3, 1) + struct.pack("<d", v)
     if isinstance(v, str):
         return _len_delim(1, v.encode())
     raise TypeError(f"unsupported MVT value type {type(v).__name__}")
 
 
-def _decode_value(buf: bytes, lo: int, hi: int):
-    """One MVT Value message -> python value. The generic _walk skips
-    fixed64 spans, so doubles (field 3, wire 1) need a manual scan."""
-    import struct
+def _layer(layer_name: str, extent: int, body: bytes) -> bytes:
+    """One Tile message holding one version-2 Layer: header fields, then
+    `body` (dictionaries and features, already framed)."""
+    layer = (
+        _key(15, 0) + _varint(2)
+        + _len_delim(1, layer_name.encode())
+        + _key(5, 0) + _varint(extent)
+        + body
+    )
+    return _len_delim(3, layer)
 
-    pos = lo
-    while pos < hi:
-        k = 0
-        shift = 0
-        while True:
-            b = buf[pos]
-            pos += 1
-            k |= (b & 0x7F) << shift
-            shift += 7
-            if not b & 0x80:
-                break
-        field, wire = k >> 3, k & 7
-        if wire == 1:  # fixed64
-            if field == 3:
-                return struct.unpack("<d", buf[pos : pos + 8])[0]
-            pos += 8
-        elif wire == 0:  # varint
-            v = 0
-            shift = 0
-            while True:
-                b = buf[pos]
-                pos += 1
-                v |= (b & 0x7F) << shift
-                shift += 7
-                if not b & 0x80:
-                    break
-            if field == 4:  # int64 (two's complement)
-                return v - (1 << 64) if v >= 1 << 63 else v
-            if field == 7:
-                return bool(v)
-        elif wire == 2:  # len-delimited
-            ln = 0
-            shift = 0
-            while True:
-                b = buf[pos]
-                pos += 1
-                ln |= (b & 0x7F) << shift
-                shift += 7
-                if not b & 0x80:
-                    break
-            if field == 1:
-                return buf[pos : pos + ln].decode()
-            pos += ln
-        else:
-            raise ValueError(f"unsupported wire type {wire} in Value")
-    raise ValueError("empty or unsupported MVT Value message")
+
+def _feature(fid: int, gtype: int, geom: bytes, tags: bytes = b"") -> bytes:
+    """One Feature message: id, packed tags (if any), type, geometry."""
+    body = _key(1, 0) + _varint(fid)
+    if tags:
+        body += _len_delim(2, tags)
+    body += _key(3, 0) + _varint(gtype) + _len_delim(4, geom)
+    return _len_delim(2, body)
 
 
 def encode_point_tile(
@@ -165,25 +135,13 @@ def encode_point_tile(
                 ki = keys.setdefault(k, len(keys))
                 vi = vals.setdefault((type(v).__name__, v), len(vals))
                 tags += _varint(ki) + _varint(vi)
-        body = bytearray(_key(1, 0) + _varint(fid))
-        if tags:
-            body += _len_delim(2, bytes(tags))
-        body += _key(3, 0) + _varint(1)  # POINT
-        body += _len_delim(4, geom)
-        feats += _len_delim(2, bytes(body))
+        feats += _feature(fid, 1, geom, bytes(tags))  # POINT
     dicts = bytearray()
     for k in keys:
         dicts += _len_delim(3, k.encode())
     for (_t, v) in vals:
         dicts += _len_delim(4, _encode_value(v))
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(dicts)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _layer(layer_name, extent, bytes(dicts) + bytes(feats))
 
 
 def _varint_cols(vals, max_bytes: int = 10):
@@ -261,14 +219,41 @@ def encode_point_tile_np(fids, pxs, pys, layer_name: str, extent: int) -> bytes:
     pos = pos + 5
     put(xcols, xlens)
     put(ycols, ylens)
+    return _layer(layer_name, extent, buf.tobytes())
 
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + buf.tobytes()
-    )
-    return _len_delim(3, layer)
+
+def _encode_paths(
+    features: list[tuple[int, list[list[tuple[int, int]]]]],
+    layer_name: str,
+    extent: int,
+    gtype: int,
+    closed: bool,
+    min_vertices: int,
+    what: str,
+) -> bytes:
+    """Shared LINESTRING/POLYGON writer: per path MoveTo(1) + LineTo(n-1),
+    plus ClosePath(1) when `closed`. Deltas are CUMULATIVE — the cursor
+    persists across the paths of one feature and restarts at (0, 0) per
+    feature."""
+    feats = bytearray()
+    for fid, paths in features:
+        geom = bytearray()
+        cx = cy = 0
+        for path in paths:
+            if len(path) < min_vertices:
+                raise ValueError(f"{what} needs >= {min_vertices} vertices, got {len(path)}")
+            x0, y0 = path[0]
+            geom += _varint(9)  # MoveTo(1)
+            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
+            cx, cy = x0, y0
+            geom += _varint(2 | ((len(path) - 1) << 3))  # LineTo(n-1)
+            for x, y in path[1:]:
+                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
+                cx, cy = x, y
+            if closed:
+                geom += _varint(15)  # ClosePath(1)
+        feats += _feature(fid, gtype, bytes(geom))
+    return _layer(layer_name, extent, bytes(feats))
 
 
 def encode_poly_tile(
@@ -281,35 +266,7 @@ def encode_poly_tile(
     it). Coords are tile-local ints and MAY lie outside [0, extent) —
     the clip-buffer case. Emitted in the given order; ring 0 should be
     the exterior (clockwise in y-down)."""
-    feats = bytearray()
-    for fid, rings in features:
-        geom = bytearray()
-        cx = cy = 0  # the cursor persists across rings within a feature
-        for ring in rings:
-            if len(ring) < 3:
-                raise ValueError(f"ring needs >= 3 vertices, got {len(ring)}")
-            x0, y0 = ring[0]
-            geom += _varint(9)  # MoveTo(1)
-            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
-            cx, cy = x0, y0
-            geom += _varint(2 | ((len(ring) - 1) << 3))  # LineTo(n-1)
-            for x, y in ring[1:]:
-                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
-                cx, cy = x, y
-            geom += _varint(15)  # ClosePath(1)
-        body = (
-            _key(1, 0) + _varint(fid)
-            + _key(3, 0) + _varint(3)  # POLYGON
-            + _len_delim(4, bytes(geom))
-        )
-        feats += _len_delim(2, body)
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _encode_paths(features, layer_name, extent, 3, True, 3, "ring")
 
 
 def encode_line_tile(
@@ -324,156 +281,118 @@ def encode_line_tile(
     same MoveTo/LineTo stream repeated, cursor persisting across parts
     (MVT 2.1 §4.3.5.3). Emitted in the given order — sort upstream for
     deterministic bytes."""
-    feats = bytearray()
-    for fid, parts in features:
-        geom = bytearray()
-        cx = cy = 0  # cursor persists across parts within a feature
-        for part in parts:
-            if len(part) < 2:
-                raise ValueError(f"linestring part needs >= 2 vertices, got {len(part)}")
-            x0, y0 = part[0]
-            geom += _varint(9)  # MoveTo(1)
-            geom += _varint(_zigzag(x0 - cx)) + _varint(_zigzag(y0 - cy))
-            cx, cy = x0, y0
-            geom += _varint(2 | ((len(part) - 1) << 3))  # LineTo(n-1)
-            for x, y in part[1:]:
-                geom += _varint(_zigzag(x - cx)) + _varint(_zigzag(y - cy))
-                cx, cy = x, y
-        body = (
-            _key(1, 0) + _varint(fid)
-            + _key(3, 0) + _varint(2)  # LINESTRING
-            + _len_delim(4, bytes(geom))
-        )
-        feats += _len_delim(2, body)
-    layer = (
-        _key(15, 0) + _varint(2)
-        + _len_delim(1, layer_name.encode())
-        + _key(5, 0) + _varint(extent)
-        + bytes(feats)
-    )
-    return _len_delim(3, layer)
+    return _encode_paths(features, layer_name, extent, 2, False, 2, "linestring part")
+
+
+def _read_varint(buf: bytes, pos: int, end: int) -> tuple[int, int]:
+    """(value, next_pos) of the varint at buf[pos]; the one varint read
+    loop of the decoder. Raises if it runs past `end`."""
+    v = shift = 0
+    while True:
+        if pos >= end:
+            raise ValueError("truncated varint: runs past the end of its message")
+        b = buf[pos]
+        pos += 1
+        v |= (b & 0x7F) << shift
+        shift += 7
+        if not b & 0x80:
+            return v, pos
+
+
+_FIXED = {1: 8, 5: 4}  # wire type -> fixed64 / fixed32 width
 
 
 def _walk(buf: bytes, pos: int, end: int):
-    """Yield (field, wire, value_or_span) over one message body."""
+    """Yield (field, wire, value_or_span) over one message body: the
+    varint value for wire 0, the (start, end) span for len-delimited and
+    fixed32/fixed64 fields. A span that overruns `end` raises instead of
+    silently reading into the next message."""
     while pos < end:
-        k = 0
-        shift = 0
-        while True:
-            b = buf[pos]
-            pos += 1
-            k |= (b & 0x7F) << shift
-            shift += 7
-            if not b & 0x80:
-                break
+        k, pos = _read_varint(buf, pos, end)
         field, wire = k >> 3, k & 7
         if wire == 0:
-            v = 0
-            shift = 0
-            while True:
-                b = buf[pos]
-                pos += 1
-                v |= (b & 0x7F) << shift
-                shift += 7
-                if not b & 0x80:
-                    break
+            v, pos = _read_varint(buf, pos, end)
             yield field, wire, v
-        elif wire == 2:
-            ln = 0
-            shift = 0
-            while True:
-                b = buf[pos]
-                pos += 1
-                ln |= (b & 0x7F) << shift
-                shift += 7
-                if not b & 0x80:
-                    break
-            yield field, wire, (pos, pos + ln)
-            pos += ln
-        elif wire == 5:
-            pos += 4  # skip fixed32
-        elif wire == 1:
-            pos += 8  # skip fixed64
+            continue
+        if wire == 2:
+            ln, pos = _read_varint(buf, pos, end)
+        elif wire in _FIXED:
+            ln = _FIXED[wire]
         else:
             raise ValueError(f"unsupported wire type {wire}")
+        if pos + ln > end:
+            raise ValueError(
+                f"field {field} (wire type {wire}) spans {ln} bytes, past the "
+                f"end of its enclosing message ({end - pos} left)"
+            )
+        yield field, wire, (pos, pos + ln)
+        pos += ln
 
 
 def _varints(buf: bytes, lo: int, hi: int) -> list[int]:
+    """A packed repeated varint field."""
     ints = []
-    p = lo
-    while p < hi:
-        v = 0
-        shift = 0
-        while True:
-            b = buf[p]
-            p += 1
-            v |= (b & 0x7F) << shift
-            shift += 7
-            if not b & 0x80:
-                break
+    while lo < hi:
+        v, lo = _read_varint(buf, lo, hi)
         ints.append(v)
     return ints
 
 
-def _parse_rings(ints: list[int]) -> list[list[tuple[int, int]]]:
-    """Polygon command stream -> rings of absolute (x, y); the implied
-    ClosePath vertex is not materialized."""
-    rings: list[list[tuple[int, int]]] = []
+def _decode_value(buf: bytes, lo: int, hi: int):
+    """One MVT Value message -> python value (string, double, int64 as
+    two's complement, bool; the first supported field wins)."""
+    for field, wire, v in _walk(buf, lo, hi):
+        if field == 1 and wire == 2:
+            return buf[v[0] : v[1]].decode()
+        if field == 3 and wire == 1:
+            return struct.unpack("<d", buf[v[0] : v[1]])[0]
+        if field == 4 and wire == 0:
+            return v - (1 << 64) if v >= 1 << 63 else v
+        if field == 7 and wire == 0:
+            return bool(v)
+    raise ValueError("empty or unsupported MVT Value message")
+
+
+def _parse_paths(ints: list[int], closed: bool) -> list[list[tuple[int, int]]]:
+    """LINESTRING/POLYGON command stream -> paths of absolute (x, y).
+    Polygon rings end in ClosePath (the implied closing vertex is not
+    materialized); ClosePath is illegal in a linestring stream."""
+    kind = "polygon" if closed else "linestring"
+    paths: list[list[tuple[int, int]]] = []
     cx = cy = 0
     i = 0
     while i < len(ints):
         cmd, count = ints[i] & 0x7, ints[i] >> 3
         i += 1
-        if cmd == 1:  # MoveTo(1) starts a ring
+        if cmd == 1:  # MoveTo(1) starts a path
             if count != 1:
-                raise ValueError(f"polygon MoveTo count {count} != 1")
+                raise ValueError(f"{kind} MoveTo count {count} != 1")
             cx += _unzigzag(ints[i])
             cy += _unzigzag(ints[i + 1])
             i += 2
-            rings.append([(cx, cy)])
+            paths.append([(cx, cy)])
         elif cmd == 2:  # LineTo(n)
+            if count < 1:
+                raise ValueError(f"{kind} LineTo count must be >= 1")
             for _ in range(count):
                 cx += _unzigzag(ints[i])
                 cy += _unzigzag(ints[i + 1])
                 i += 2
-                rings[-1].append((cx, cy))
+                paths[-1].append((cx, cy))
         elif cmd == 7:  # ClosePath
-            if len(rings[-1]) < 3:
+            if not closed:
+                raise ValueError("ClosePath is illegal in a LINESTRING stream")
+            if len(paths[-1]) < 3:
                 raise ValueError("ClosePath on a ring with < 3 vertices")
         else:
             raise ValueError(f"unknown geometry command {cmd}")
-    return rings
+    return paths
 
 
-def _parse_parts(ints: list[int]) -> list[list[tuple[int, int]]]:
-    """LineString command stream -> parts of absolute (x, y). Identical
-    to the polygon walk minus ClosePath (which is illegal here)."""
-    parts: list[list[tuple[int, int]]] = []
-    cx = cy = 0
-    i = 0
-    while i < len(ints):
-        cmd, count = ints[i] & 0x7, ints[i] >> 3
-        i += 1
-        if cmd == 1:  # MoveTo(1) starts a part
-            if count != 1:
-                raise ValueError(f"linestring MoveTo count {count} != 1")
-            cx += _unzigzag(ints[i])
-            cy += _unzigzag(ints[i + 1])
-            i += 2
-            parts.append([(cx, cy)])
-        elif cmd == 2:  # LineTo(n)
-            if count < 1:
-                raise ValueError("linestring LineTo count must be >= 1")
-            for _ in range(count):
-                cx += _unzigzag(ints[i])
-                cy += _unzigzag(ints[i + 1])
-                i += 2
-                parts[-1].append((cx, cy))
-        elif cmd == 7:
-            raise ValueError("ClosePath is illegal in a LINESTRING stream")
-        else:
-            raise ValueError(f"unknown geometry command {cmd}")
-    return parts
+def _parse_point(ints: list[int]) -> tuple[int, int]:
+    if not ints or ints[0] != 9:
+        raise ValueError("expected single MoveTo point geometry")
+    return _unzigzag(ints[1]), _unzigzag(ints[2])
 
 
 def _decode_layers(buf: bytes) -> list[dict]:
@@ -534,23 +453,23 @@ def _tags_to_attrs(layer: dict, tags: list[int]) -> dict:
     return {keys[tags[i]]: values[tags[i + 1]] for i in range(0, len(tags), 2)}
 
 
-def decode_point_tile(buf: bytes, with_attrs: bool = False) -> dict:
-    """Parse one MVT tile (point layers only). Returns
-    {"layers": [{"name", "extent", "version", "keys", "values",
-    "features": [(id, px, py)]}]}. With `with_attrs`, features are
-    (id, px, py, {key: value}) resolved through the layer dictionaries.
-    Non-point geometry types raise."""
+_GEOM_NAMES = {1: "POINT", 2: "LINESTRING", 3: "POLYGON"}
+
+
+def _decode_typed(buf: bytes, gtype: int, geometry, with_attrs: bool = False) -> dict:
+    """Decode a tile whose every feature has geometry type `gtype`; each
+    feature becomes (id, *geometry(command ints)) plus, with
+    `with_attrs`, its {key: value} tags."""
+    name = _GEOM_NAMES[gtype]
     layers = _decode_layers(buf)
     for layer in layers:
         feats = []
-        for fid, gtype, ints, tags in layer["features"]:
-            if gtype != 1:
+        for fid, gt, ints, tags in layer["features"]:
+            if gt != gtype:
                 raise NotImplementedError(
-                    f"geometry type {gtype} unavailable in-sandbox (POINT only)"
+                    f"geometry type {gt} in a {name.lower()} layer ({name} only)"
                 )
-            if not ints or ints[0] != 9:
-                raise ValueError("expected single MoveTo point geometry")
-            row = (fid, _unzigzag(ints[1]), _unzigzag(ints[2]))
+            row = (fid, *geometry(ints))
             if with_attrs:
                 row += (_tags_to_attrs(layer, tags),)
             feats.append(row)
@@ -558,21 +477,20 @@ def decode_point_tile(buf: bytes, with_attrs: bool = False) -> dict:
     return {"layers": layers}
 
 
+def decode_point_tile(buf: bytes, with_attrs: bool = False) -> dict:
+    """Parse one MVT tile (point layers only). Returns
+    {"layers": [{"name", "extent", "version", "keys", "values",
+    "features": [(id, px, py)]}]}. With `with_attrs`, features are
+    (id, px, py, {key: value}) resolved through the layer dictionaries.
+    Non-point geometry types raise."""
+    return _decode_typed(buf, 1, _parse_point, with_attrs)
+
+
 def decode_line_tile(buf: bytes) -> dict:
     """Parse one MVT tile (linestring layers only). Returns
     {"layers": [{"name", "extent", "version", "features":
     [(id, parts)]}]} with parts of absolute (x, y) vertices."""
-    layers = _decode_layers(buf)
-    for layer in layers:
-        feats = []
-        for fid, gtype, ints, _tags in layer["features"]:
-            if gtype != 2:
-                raise NotImplementedError(
-                    f"geometry type {gtype} in a linestring layer (LINESTRING only)"
-                )
-            feats.append((fid, _parse_parts(ints)))
-        layer["features"] = feats
-    return {"layers": layers}
+    return _decode_typed(buf, 2, lambda ints: (_parse_paths(ints, closed=False),))
 
 
 def decode_poly_tile(buf: bytes) -> dict:
@@ -580,14 +498,4 @@ def decode_poly_tile(buf: bytes) -> dict:
     {"layers": [{"name", "extent", "version", "features":
     [(id, rings)]}]} with rings of absolute (x, y) vertices (closing
     vertex implied, as encoded)."""
-    layers = _decode_layers(buf)
-    for layer in layers:
-        feats = []
-        for fid, gtype, ints, _tags in layer["features"]:
-            if gtype != 3:
-                raise NotImplementedError(
-                    f"geometry type {gtype} in a polygon layer (POLYGON only)"
-                )
-            feats.append((fid, _parse_rings(ints)))
-        layer["features"] = feats
-    return {"layers": layers}
+    return _decode_typed(buf, 3, lambda ints: (_parse_paths(ints, closed=True),))

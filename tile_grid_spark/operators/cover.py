@@ -12,12 +12,13 @@ x-middle, y-fastest) when a test needs it; production plans never sort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.model import LL_EPSILON
 from ..core.tms import Tms
 from ..functions.grid_cols import (
+    lonlat_to_grid,
     mercator_x,
     mercator_y,
     xy_tile_x,
@@ -56,15 +57,7 @@ def cover_bbox_geographic(
     p = tms.zoom_params(zoom)
     bbox = tms.bbox()
     eps = F.lit(LL_EPSILON)
-
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = lambda c: c  # noqa: E731
-    else:
-        raise ValueError(f"cover supports EPSG:3857/4326 TMS, got {tms.crs()}")
+    to_x, to_y = lonlat_to_grid(tms, "cover")
 
     def x_range(wcol, ecol):
         w_ = F.greatest(wcol, F.lit(bbox.left)) + eps

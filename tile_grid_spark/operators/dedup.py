@@ -548,7 +548,6 @@ def embedding_near_pairs(
     bucket_bits: int = 8,
     n_probe_flips: int = 4,
     seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Cosine near-dup via random-hyperplane LSH buckets + exact verify.
 
@@ -570,7 +569,7 @@ def embedding_near_pairs(
             F.transform(emb_col, lambda x: x.cast("double")).alias("_emb"),
         )
         .withColumn("_bkt0", bucket("_emb"))
-        .withColumn("_n", norm_expr("_emb", dim))
+        .withColumn("_n", norm_expr("_emb"))
     )
     probes = F.array(
         F.col("_bkt0"),
@@ -591,7 +590,7 @@ def embedding_near_pairs(
         .filter(F.col("l._id") < F.col("r._id"))
         .withColumn(
             "cosine",
-            dot_expr("l._emb", "r._emb", dim) / (F.col("l._n") * F.col("r._n")),
+            dot_expr("l._emb", "r._emb") / (F.col("l._n") * F.col("r._n")),
         )
         .filter(F.col("cosine") >= threshold)
         .select(

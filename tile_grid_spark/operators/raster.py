@@ -2,9 +2,10 @@
 
 North-rule operator. Rasterization: per-(zoom, tile_x, tile_y) group,
 paint a tile_px x tile_px uint8 raster from the points (density mask or
-mean-value band) with `applyInPandas` — numpy index arithmetic only; the
-tile's pixel grid comes from xy_bounds/resolution exactly as the core
-derives them. Inverse (vector <- raster): per-tile mask -> GeoJSON
+mean-value band), many tiles per Arrow batch via
+plans/skew.batched_key_map — numpy index arithmetic only; the tile's
+pixel grid comes from xy_bounds/resolution exactly as the core derives
+them. Inverse (vector <- raster): per-tile mask -> GeoJSON
 features via bbox_to_feature semantics in native to_json columns.
 
 Scale notes: groups are bounded by points-per-tile; dense tiles should be
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..core.tms import Tms
 from ..functions.grid_cols import geo_bounds_cols, mercator_x, mercator_y, with_tile
+from ..plans.skew import batched_key_map
 
 RASTER_SCHEMA = (
     "zoom INT, tile_x BIGINT, tile_y BIGINT, n_points BIGINT, "
@@ -31,45 +33,6 @@ RASTER_SCHEMA = (
 )
 
 _KEYS = ("zoom", "tile_x", "tile_y")
-
-
-def _grouped_map_batched(df: DataFrame, paint_many, schema: str,
-                         num_partitions: int | None = None) -> DataFrame:
-    """Batched grouped painter: repartition+sort by tile key, then paint
-    MANY contiguous tile groups per Arrow batch in ONE python call.
-
-    applyInPandas pays tens of ms of dispatch/Arrow overhead per GROUP,
-    which dominates whenever tiles hold few rows (measured: 1500
-    single-row z10 tiles took ~8 s through applyInPandas; the painting
-    itself is microseconds). Rows of the LAST key in each batch are held
-    back and prepended to the next batch so a tile split across an Arrow
-    batch boundary is never painted twice — keys are contiguous within a
-    partition after the sort, and mapInPandas iterates one partition's
-    batches in order.
-    """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    sorted_df = df.repartition(n, *_KEYS).sortWithinPartitions(*_KEYS)
-
-    def run(batches):
-        pending = None
-        for b in batches:
-            if pending is not None and len(pending):
-                b = pd.concat([pending, b], ignore_index=True)
-                pending = None
-            if len(b) == 0:
-                continue
-            last = tuple(b.iloc[-1][k] for k in _KEYS)
-            is_last = np.ones(len(b), dtype=bool)
-            for c, v in zip(_KEYS, last):
-                is_last &= (b[c] == v).to_numpy()
-            pending = b[is_last]
-            body = b[~is_last]
-            if len(body):
-                yield paint_many(body)
-        if pending is not None and len(pending):
-            yield paint_many(pending)
-
-    return sorted_df.mapInPandas(run, schema)
 
 
 def rasterize_points(
@@ -111,8 +74,8 @@ def rasterize_points(
             out["max_count"].append(int(img.max()))
         return pd.DataFrame(out)
 
-    return _grouped_map_batched(
-        pts.select(*_KEYS, "_mx", "_my"), paint_many, RASTER_SCHEMA
+    return batched_key_map(
+        pts.select(*_KEYS, "_mx", "_my"), _KEYS, paint_many, RASTER_SCHEMA
     )
 
 
@@ -208,7 +171,7 @@ def rasterize_footprints(
             out["covered_px_sum"].append(int(img.sum()))
         return pd.DataFrame(out)
 
-    return _grouped_map_batched(cov, paint_many, FOOTPRINT_SCHEMA)
+    return batched_key_map(cov, _KEYS, paint_many, FOOTPRINT_SCHEMA)
 
 
 def decode_mask(mask: bytes, tile_px: int = 256) -> np.ndarray:

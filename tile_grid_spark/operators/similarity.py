@@ -21,23 +21,22 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 from pyspark.sql.window import Window
 
 
-def dot_expr(a, b, dim: int | None = None) -> F.Column:
+def dot_expr(a, b) -> F.Column:
     """Dot product of two array<double> columns via the HOF fold
     (aggregate over zip_with).
 
-    `dim` is accepted for API stability but IGNORED: an unrolled
-    element_at chain was measured ~2x SLOWER than this fold at dim
-    32-64 (the fold iterates the UnsafeArrayData in one codegen loop;
-    N separate element_at calls are each bounds-checked and split the
-    generated method), and interpreted-when-in-a-join-condition made it
-    ~3x slower still. The cheap, load-bearing optimization is in the
+    No unrolled variant: an element_at chain was measured ~2x SLOWER
+    than this fold at dim 32-64 (the fold iterates the UnsafeArrayData
+    in one codegen loop; N separate element_at calls are each
+    bounds-checked and split the generated method), and
+    interpreted-when-in-a-join-condition made it ~3x slower still. The cheap, load-bearing optimization is in the
     OPERATORS: norms are computed once per row per side, never per
     pair — that alone is 3x on any cosine join."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
-def norm_expr(a, dim: int | None = None) -> F.Column:
-    return F.sqrt(dot_expr(a, a, dim))
+def norm_expr(a) -> F.Column:
+    return F.sqrt(dot_expr(a, a))
 
 
 def brute_force_topk(
@@ -47,7 +46,6 @@ def brute_force_topk(
     query_id: str = "query_id",
     cand_id: str = "cand_id",
     emb: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries x candidates + window.
     The baseline every approximate variant is validated against.
@@ -56,12 +54,12 @@ def brute_force_topk(
     (per-partition top-k before the shuffle)."""
     q = queries.select(
         F.col(query_id), F.transform(emb, lambda x: x.cast("double")).alias("_qe")
-    ).withColumn("_qn", norm_expr("_qe", dim))
+    ).withColumn("_qn", norm_expr("_qe"))
     c = candidates.select(
         F.col(cand_id), F.transform(emb, lambda x: x.cast("double")).alias("_ce")
-    ).withColumn("_cn", norm_expr("_ce", dim))
+    ).withColumn("_cn", norm_expr("_ce"))
     pairs = c.crossJoin(F.broadcast(q)).withColumn(
-        "cosine", dot_expr("_qe", "_ce", dim) / (F.col("_qn") * F.col("_cn"))
+        "cosine", dot_expr("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
     )
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(cand_id))
     return (
@@ -196,17 +194,16 @@ def lsh_topk(
     bucket_bits: int = 10,
     n_probe_flips: int = 4,
     seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: hyperplane buckets; queries also probe the
     buckets at Hamming distance 1 on the lowest n_probe_flips bits."""
     bucket = hyperplane_bucket_udf(n_planes, bucket_bits, seed)
     c = candidates.select(
         cand_id, F.transform(emb, lambda x: x.cast("double")).alias("_ce")
-    ).withColumn("_bkt", bucket("_ce")).withColumn("_cn", norm_expr("_ce", dim))
+    ).withColumn("_bkt", bucket("_ce")).withColumn("_cn", norm_expr("_ce"))
     q = queries.select(
         query_id, F.transform(emb, lambda x: x.cast("double")).alias("_qe")
-    ).withColumn("_bkt0", bucket("_qe")).withColumn("_qn", norm_expr("_qe", dim))
+    ).withColumn("_bkt0", bucket("_qe")).withColumn("_qn", norm_expr("_qe"))
     probes = F.array(
         F.col("_bkt0"),
         *[
@@ -216,7 +213,7 @@ def lsh_topk(
     )
     qp = q.withColumn("_bkt", F.explode(probes)).drop("_bkt0")
     pairs = qp.join(c, "_bkt").withColumn(
-        "cosine", dot_expr("_qe", "_ce", dim) / (F.col("_qn") * F.col("_cn"))
+        "cosine", dot_expr("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
     )
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(cand_id))
     return (
@@ -441,7 +438,7 @@ def pq_topk(
     )
     w2 = Window.partitionBy(query_id).orderBy(F.col("score").desc(), F.col(cand_id))
     return (
-        short.withColumn("score", dot_expr("_qe", "_ce", dim))
+        short.withColumn("score", dot_expr("_qe", "_ce"))
         .withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
         .select(query_id, cand_id, "rank", F.round("score", 6).alias("score"))
@@ -458,7 +455,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 3,
     seed: int = 42,
-    dim: int | None = None,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: candidates in their nearest centroid list,
@@ -476,15 +472,15 @@ def ivf_topk(
     c = candidates.select(
         cand_id, F.transform(emb, lambda x: x.cast("double")).alias("_ce")
     ).withColumn("_list", F.element_at(assign1("_ce"), 1)).withColumn(
-        "_cn", norm_expr("_ce", dim)
+        "_cn", norm_expr("_ce")
     )
     q = queries.select(
         query_id, F.transform(emb, lambda x: x.cast("double")).alias("_qe")
     ).withColumn("_list", F.explode(assignP("_qe"))).withColumn(
-        "_qn", norm_expr("_qe", dim)
+        "_qn", norm_expr("_qe")
     )
     pairs = q.join(c, "_list").withColumn(
-        "cosine", dot_expr("_qe", "_ce", dim) / (F.col("_qn") * F.col("_cn"))
+        "cosine", dot_expr("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
     )
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(cand_id))
     return (

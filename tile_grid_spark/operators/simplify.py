@@ -28,7 +28,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..plans.skew import batched_key_map
 
 
 def dp_keep_mask(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
@@ -85,15 +86,15 @@ def simplify_paths(
     trajectories per Arrow batch, grouped pandas-side — NOT a per-group
     applyInPandas: with realistic fleets (millions of short tracks) the
     per-group Arrow round trip dominates the actual RDP math (measured
-    ~2.5x on the 2000x200 bench). A trajectory whose rows straddle an
-    Arrow batch boundary is carried into the next batch (the partition
-    iterator spans all of a key's rows, so the carry always completes)."""
+    ~2.5x on the 2000x200 bench). plans/skew.batched_key_map carries a
+    trajectory that straddles an Arrow batch boundary into the next
+    batch."""
     if tolerance < 0:
         raise ValueError(f"tolerance must be >= 0, got {tolerance}")
     cols = [id_col, order_col, x, y]
     out_schema = points.select(*cols).schema
 
-    def _simplify_block(pdf: pd.DataFrame):
+    def _simplify_block(pdf: pd.DataFrame) -> pd.DataFrame:
         # pdf is sorted by (id, order); groupby(sort=False) keeps it
         out = []
         for _tid, g in pdf.groupby(id_col, sort=False):
@@ -108,33 +109,8 @@ def simplify_paths(
                 tolerance,
             )
             out.append(g.loc[keep, cols])
-        return out
+        return pd.concat(out, ignore_index=True) if out else pdf.iloc[:0]
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None and len(carry):
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) == 0:
-                carry = None
-                continue
-            # the last id's rows may continue in the next batch: hold
-            # them back (rows are key-contiguous after the sort)
-            tail = b[id_col] == b[id_col].iloc[-1]
-            carry = b.loc[tail]
-            body = b.loc[~tail]
-            if len(body):
-                out = _simplify_block(body)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-        if carry is not None and len(carry):
-            out = _simplify_block(carry)
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    parts = (
-        points.select(*cols)
-        .repartition(F.col(id_col))
-        .sortWithinPartitions(id_col, order_col)
+    return batched_key_map(
+        points.select(*cols), (id_col,), _simplify_block, out_schema, order=(order_col,)
     )
-    return parts.mapInPandas(run, out_schema)

@@ -6,27 +6,28 @@ addressing (/root/reference/src/tms.rs xy_bounds/tile semantics for the
 local-coordinate transform). Payload format is the public Mapbox Vector
 Tile 2.1 spec via the stdlib-only codec in functions/mvt.py.
 
-Scale shape: ONE shuffle (groupBy tile key — the same exchange any
-per-tile sink needs), then applyInPandas builds each tile's binary
-where its rows landed; feature coords are quantized to tile-local
-integers with native Column math BEFORE the shuffle, so only
-(tile, id, px, py) ints move, never raw payloads. Dense tiles are real
-data skew: cap features per tile explicitly (`max_features_per_tile`
-raises) rather than OOM inside a task — producers should roll up dense
-zooms first (operators/rollup.py).
+Scale shape: ONE shuffle (hash on the tile key — the same exchange any
+per-tile sink needs), then plans/skew.batched_key_map builds each tile's
+binary where its rows landed, many tiles per Arrow batch; feature coords
+are quantized to tile-local integers with native Column math BEFORE the
+shuffle, so only (tile, id, px, py) ints move, never raw payloads. Dense
+tiles are real data skew: cap features per tile explicitly
+(`max_features_per_tile` raises) rather than OOM inside a task —
+producers should roll up dense zooms first (operators/rollup.py).
 """
 
 from __future__ import annotations
 
+import math
 from itertools import islice
-from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..core.tms import Tms
-from ..functions.grid_cols import mercator_x, mercator_y, xy_tile_x, xy_tile_y
+from ..core.tms import Tms, ZoomParams
+from ..functions.grid_cols import lonlat_to_grid, tile_key, xy_tile_x, xy_tile_y
 from ..functions.mvt import (
     DEFAULT_EXTENT,
     decode_line_tile,
@@ -34,53 +35,91 @@ from ..functions.mvt import (
     decode_poly_tile,
     encode_line_tile,
     encode_point_tile,
+    encode_point_tile_np,
     encode_poly_tile,
 )
+from ..plans.skew import batched_key_map
 from .cover import cover_bbox_geographic
 
 TILES_SCHEMA = "tile_x BIGINT, tile_y BIGINT, n_features INT, mvt BINARY"
+_TILE_XY = ("tile_x", "tile_y")
 
 
-def _batched_group_apply(rows: DataFrame, key_cols: list[str], build) -> DataFrame:
-    """Per-group build with MANY groups per Arrow round trip: repartition
-    on the group key, sort the partition so each key's rows are
-    contiguous, then mapInPandas, calling `build(group_pdf)` (one
-    1-row-out tile builder, same contract as applyInPandas) for every
-    whole group inside an Arrow batch and carrying a boundary-straddling
-    group into the next batch. Same single exchange as
-    groupBy().applyInPandas, but the per-group Arrow round trip — which
-    dominates when groups are small (a z6 tile has ~hundreds of points,
-    a pyramid parent has <= 4 children) — is amortized over the batch
-    (measured 1.7x on the simplify bench with the identical pattern)."""
+def _encode_tiles(rows: DataFrame, build, keys: tuple[str, str] = _TILE_XY) -> DataFrame:
+    """TILES_SCHEMA rows from `build(group_pdf)`, called once per `keys`
+    group (a 1-row-out tile builder, same contract as applyInPandas)
+    inside plans/skew.batched_key_map's whole-group blocks."""
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for b in batches:
-            if carry is not None and len(carry):
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) == 0:
-                carry = None
-                continue
-            tail = pd.Series(True, index=b.index)
-            for k in key_cols:
-                tail &= b[k] == b[k].iloc[-1]
-            carry = b.loc[tail]
-            body = b.loc[~tail]
-            if len(body):
-                yield pd.concat(
-                    [
-                        build(g.reset_index(drop=True))
-                        for _, g in body.groupby(key_cols, sort=False)
-                    ],
-                    ignore_index=True,
-                )
-        if carry is not None and len(carry):
-            yield build(carry.reset_index(drop=True))
+    def block(body: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat(
+            [build(g.reset_index(drop=True)) for _, g in body.groupby(list(keys), sort=False)],
+            ignore_index=True,
+        )
 
-    parts = rows.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-        *key_cols
+    return batched_key_map(rows, keys, block, TILES_SCHEMA)
+
+
+def _check_cap(pdf: pd.DataFrame, cap: int, unit: str, name: str, hint: str) -> None:
+    if len(pdf) > cap:
+        raise ValueError(
+            f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
+            f"{len(pdf)} {unit} > {name}={cap} — {hint}"
+        )
+
+
+def _tile_frame(tx, ty, n_features: int, mvt: bytes) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "tile_x": [int(tx)],
+            "tile_y": [int(ty)],
+            "n_features": [n_features],
+            "mvt": [mvt],
+        }
     )
-    return parts.mapInPandas(run, TILES_SCHEMA)
+
+
+def _quantizer(p: ZoomParams, extent: int, clamp: bool):
+    """(qx, qy): TMS-CRS coordinate Column -> tile-local integer
+    floor((frac_within_tile) * extent) against the row's tile_x/tile_y.
+    `clamp` pins the result to [0, extent-1] (points and lines, which sit
+    inside their own tile); unclamped is the polygon clip-buffer frame,
+    where vertices of a multi-tile ring lie outside [0, extent)."""
+    span_x = p.resolution * float(p.tile_width)
+    span_y = p.resolution * float(p.tile_height)
+
+    def q(frac: F.Column, tile: str) -> F.Column:
+        raw = F.floor((frac - F.col(tile)) * F.lit(float(extent)))
+        if clamp:
+            raw = F.least(F.greatest(raw, F.lit(0)), F.lit(extent - 1))
+        return raw.cast("int")
+
+    def qx(gx: F.Column) -> F.Column:
+        return q((gx - F.lit(p.origin_x)) / F.lit(span_x), "tile_x")
+
+    def qy(gy: F.Column) -> F.Column:
+        return q((F.lit(p.origin_y) - gy) / F.lit(span_y), "tile_y")
+
+    return qx, qy
+
+
+def _with_grid_tile(df: DataFrame, tms: Tms, p: ZoomParams, lon: str, lat: str, caller: str):
+    """Stage the TMS-CRS coordinates (_gx, _gy) once, then the row's
+    tile_x/tile_y from them."""
+    to_x, to_y = lonlat_to_grid(tms, caller)
+    staged = df.withColumns({"_gx": to_x(lon), "_gy": to_y(lat)})
+    return staged.withColumns(
+        {"tile_x": xy_tile_x(F.col("_gx"), p), "tile_y": xy_tile_y(F.col("_gy"), p)}
+    )
+
+
+def _attr_cast(dtype: T.DataType):
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int
+    if isinstance(dtype, T.BooleanType):
+        return bool
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return float
+    return None
 
 
 def encode_point_tiles(
@@ -106,121 +145,56 @@ def encode_point_tiles(
     index pairs; string/int64/double/bool). Null attribute values are
     elided from that feature's tags."""
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        gx, gy = mercator_x(lon), mercator_y(lat)
-    elif srid == 4326:
-        gx, gy = F.col(lon), F.col(lat)
-    else:
-        raise ValueError(f"encode_point_tiles supports EPSG:3857/4326, got {tms.crs()}")
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local(g, origin, span, tile, flip):
-        frac = (F.lit(origin) - g) / F.lit(span) if flip else (g - F.lit(origin)) / F.lit(span)
-        raw = F.floor((frac - tile) * F.lit(float(extent)))
-        return F.least(
-            F.greatest(raw, F.lit(0)), F.lit(extent - 1)
-        ).cast("int")
-
-    staged = points.withColumns({"_gx": gx, "_gy": gy})
-    staged = staged.withColumns(
-        {
-            "tile_x": xy_tile_x(F.col("_gx"), p),
-            "tile_y": xy_tile_y(F.col("_gy"), p),
-        }
-    )
-    from pyspark.sql import types as T
-
-    attr_casts = {
-        c: (
-            int
-            if isinstance(
-                points.schema[c].dataType,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-            )
-            else bool
-            if isinstance(points.schema[c].dataType, T.BooleanType)
-            else float
-            if isinstance(points.schema[c].dataType, (T.FloatType, T.DoubleType))
-            else None
-        )
-        for c in attr_cols
-    }
+    qx, qy = _quantizer(p, extent, clamp=True)
+    staged = _with_grid_tile(points, tms, p, lon, lat, "encode_point_tiles")
+    attr_casts = {c: _attr_cast(points.schema[c].dataType) for c in attr_cols}
     rows = staged.select(
         "tile_x",
         "tile_y",
         F.col(id_col).alias("fid"),
-        local(F.col("_gx"), p.origin_x, span_x, F.col("tile_x"), False).alias("px"),
-        local(F.col("_gy"), p.origin_y, span_y, F.col("tile_y"), True).alias("py"),
+        qx(F.col("_gx")).alias("px"),
+        qy(F.col("_gy")).alias("py"),
         *[F.col(c) for c in attr_cols],
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} features > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
-            )
+        _check_cap(pdf, max_features_per_tile, "features",
+                   "max_features_per_tile", "roll up before encoding")
         pdf = pdf.sort_values("fid")
         if not attr_cols:
             # no tag dictionaries: the whole feature stream is three
             # varints per row around fixed key bytes — vectorized numpy
             # encoder, byte-identical (parity pytest), ~10x the scalar
             # per-point loop that dominated the MVT production bench
-            from ..functions.mvt import encode_point_tile_np
-
-            return pd.DataFrame(
-                {
-                    "tile_x": [int(pdf.tile_x.iloc[0])],
-                    "tile_y": [int(pdf.tile_y.iloc[0])],
-                    "n_features": [len(pdf)],
-                    "mvt": [
-                        encode_point_tile_np(
-                            pdf.fid.to_numpy(),
-                            pdf.px.to_numpy(),
-                            pdf.py.to_numpy(),
-                            layer,
-                            extent,
-                        )
-                    ],
-                }
+            mvt = encode_point_tile_np(
+                pdf.fid.to_numpy(), pdf.px.to_numpy(), pdf.py.to_numpy(), layer, extent
             )
+            return _tile_frame(pdf.tile_x.iloc[0], pdf.tile_y.iloc[0], len(pdf), mvt)
         feats = [(int(f), int(x), int(y)) for f, x, y in zip(pdf.fid, pdf.px, pdf.py)]
-        attrs = None
-        if attr_cols:
-            # nullable integral/bool columns arrive in pandas as float64
-            # (NaN for null) — restore the declared Spark type so the
-            # codec's int/bool/float/str switch sees python natives;
-            # null and NaN are both elided from the feature's tags
-            import math as _math
 
-            def _clean(c: str) -> list:
-                cast = attr_casts[c]
-                out = []
-                for v in pdf[c].tolist():
-                    if v is None or (isinstance(v, float) and _math.isnan(v)):
-                        out.append(None)
-                    else:
-                        out.append(cast(v) if cast else v)
-                return out
-
-            cols = {c: _clean(c) for c in attr_cols}
-            attrs = [
-                {c: cols[c][i] for c in attr_cols if cols[c][i] is not None}
-                for i in range(len(pdf))
+        # nullable integral/bool columns arrive in pandas as float64
+        # (NaN for null) — restore the declared Spark type so the codec's
+        # int/bool/float/str switch sees python natives; null and NaN are
+        # both elided from the feature's tags
+        def _clean(c: str) -> list:
+            cast = attr_casts[c]
+            return [
+                None if v is None or (isinstance(v, float) and math.isnan(v))
+                else cast(v) if cast else v
+                for v in pdf[c].tolist()
             ]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_point_tile(feats, layer, extent, attrs=attrs)],
-            }
+
+        cols = {c: _clean(c) for c in attr_cols}
+        attrs = [
+            {c: cols[c][i] for c in attr_cols if cols[c][i] is not None}
+            for i in range(len(pdf))
+        ]
+        return _tile_frame(
+            pdf.tile_x.iloc[0], pdf.tile_y.iloc[0], len(feats),
+            encode_point_tile(feats, layer, extent, attrs=attrs),
         )
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _encode_tiles(rows, build)
 
 
 def encode_bbox_poly_tiles(
@@ -247,45 +221,22 @@ def encode_bbox_poly_tiles(
     encode_point_tiles: quantize with native Columns, shuffle only
     (tile, id, 4 ints), build bytes where the rows land."""
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = F.col  # noqa: E731
-    else:
-        raise ValueError(
-            f"encode_bbox_poly_tiles supports EPSG:3857/4326, got {tms.crs()}"
-        )
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local_x(col):
-        frac = (to_x(col) - F.lit(p.origin_x)) / F.lit(span_x)
-        return F.floor((frac - F.col("tile_x")) * F.lit(float(extent))).cast("int")
-
-    def local_y(col):
-        frac = (F.lit(p.origin_y) - to_y(col)) / F.lit(span_y)
-        return F.floor((frac - F.col("tile_y")) * F.lit(float(extent))).cast("int")
-
+    to_x, to_y = lonlat_to_grid(tms, "encode_bbox_poly_tiles")
+    qx, qy = _quantizer(p, extent, clamp=False)
     covered = cover_bbox_geographic(rects, tms, zoom, west, south, east, north)
     rows = covered.select(
         "tile_x",
         "tile_y",
         F.col(id_col).alias("fid"),
-        local_x(west).alias("pxw"),
-        local_x(east).alias("pxe"),
-        local_y(north).alias("pyn"),
-        local_y(south).alias("pys"),
+        qx(to_x(west)).alias("pxw"),
+        qx(to_x(east)).alias("pxe"),
+        qy(to_y(north)).alias("pyn"),
+        qy(to_y(south)).alias("pys"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} features > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
-            )
+        _check_cap(pdf, max_features_per_tile, "features",
+                   "max_features_per_tile", "roll up before encoding")
         pdf = pdf.sort_values("fid")
         feats = [
             (
@@ -295,16 +246,12 @@ def encode_bbox_poly_tiles(
             )
             for f, xw, xe, yn, ys in zip(pdf.fid, pdf.pxw, pdf.pxe, pdf.pyn, pdf.pys)
         ]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_poly_tile(feats, layer, extent)],
-            }
+        return _tile_frame(
+            pdf.tile_x.iloc[0], pdf.tile_y.iloc[0], len(feats),
+            encode_poly_tile(feats, layer, extent),
         )
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _encode_tiles(rows, build)
 
 
 def encode_path_tiles(
@@ -340,31 +287,9 @@ def encode_path_tiles(
     build (no extra window pass). Reference addressing: tile/local
     coords re-derive /root/reference/src/tms.rs xy_tile + xy_bounds
     semantics, as in encode_point_tiles."""
-    from pyspark.sql import Window
-
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        gx, gy = mercator_x(lon), mercator_y(lat)
-    elif srid == 4326:
-        gx, gy = F.col(lon), F.col(lat)
-    else:
-        raise ValueError(f"encode_path_tiles supports EPSG:3857/4326, got {tms.crs()}")
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
-
-    def local(g, origin, span, tile, flip):
-        frac = (F.lit(origin) - g) / F.lit(span) if flip else (g - F.lit(origin)) / F.lit(span)
-        raw = F.floor((frac - tile) * F.lit(float(extent)))
-        return F.least(F.greatest(raw, F.lit(0)), F.lit(extent - 1)).cast("int")
-
-    staged = points.withColumns({"_gx": gx, "_gy": gy})
-    staged = staged.withColumns(
-        {
-            "tile_x": xy_tile_x(F.col("_gx"), p),
-            "tile_y": xy_tile_y(F.col("_gy"), p),
-        }
-    )
+    qx, qy = _quantizer(p, extent, clamp=True)
+    staged = _with_grid_tile(points, tms, p, lon, lat, "encode_path_tiles")
     w = Window.partitionBy(id_col).orderBy(order_col)
     # first row of a trajectory (lag null) starts run 1, as does every
     # tile change; the cumulative sum is the run index
@@ -384,17 +309,13 @@ def encode_path_tiles(
         F.col(id_col).alias("fid"),
         "run_id",
         F.col(order_col).alias("vseq"),
-        local(F.col("_gx"), p.origin_x, span_x, F.col("tile_x"), False).alias("px"),
-        local(F.col("_gy"), p.origin_y, span_y, F.col("tile_y"), True).alias("py"),
+        qx(F.col("_gx")).alias("px"),
+        qy(F.col("_gy")).alias("py"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_features_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} vertices > max_features_per_tile="
-                f"{max_features_per_tile} — roll up before encoding"
-            )
+        _check_cap(pdf, max_features_per_tile, "vertices",
+                   "max_features_per_tile", "roll up before encoding")
         pdf = pdf.sort_values(["fid", "run_id", "vseq"])
         feats = []
         for fid, g in pdf.groupby("fid", sort=True):
@@ -409,16 +330,43 @@ def encode_path_tiles(
             return pd.DataFrame(
                 {"tile_x": [], "tile_y": [], "n_features": [], "mvt": []}
             ).astype({"tile_x": "int64", "tile_y": "int64", "n_features": "int32"})
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_line_tile(feats, layer, extent)],
-            }
+        return _tile_frame(
+            pdf.tile_x.iloc[0], pdf.tile_y.iloc[0], len(feats),
+            encode_line_tile(feats, layer, extent),
         )
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _encode_tiles(rows, build)
+
+
+def _decode_stats(tiles: DataFrame, schema: str, decode, stats) -> DataFrame:
+    """Per tile: `decode(payload)` must yield exactly one layer; the row
+    is (tile_x, tile_y, *stats(features), extent) in `schema` order.
+    Everything except the passthrough tile address is recomputed from
+    the bytes, so any encoder/wire bug surfaces as a value mismatch."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches):
+        for b in batches:
+            rows = []
+            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
+                (layer,) = decode(bytes(payload))["layers"]
+                fs = layer["features"]
+                rows.append((int(tx), int(ty), *stats(fs), int(layer["extent"])))
+            yield pd.DataFrame(rows, columns=names)
+
+    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(run, schema)
+
+
+def _path_stats(fs, with_parts: bool) -> tuple:
+    """(n_features, [n_parts,] n_vertices, min_id, max_id, sum_px,
+    sum_py) over (id, paths) features."""
+    verts = [v for _, paths in fs for path in paths for v in path]
+    parts = (sum(len(paths) for _, paths in fs),) if with_parts else ()
+    return (
+        len(fs), *parts, len(verts),
+        min(f[0] for f in fs), max(f[0] for f in fs),
+        sum(v[0] for v in verts), sum(v[1] for v in verts),
+    )
 
 
 DECODED_SCHEMA = (
@@ -428,31 +376,15 @@ DECODED_SCHEMA = (
 
 
 def decode_tile_stats(tiles: DataFrame) -> DataFrame:
-    """Re-parse the MVT binaries and aggregate what they CONTAIN —
-    everything except the passthrough tile address is recomputed from
-    the bytes, so any encoder/wire bug surfaces as a value mismatch."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "min_id", "max_id",
-                "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_point_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(f[1] for f in fs))
-                out["sum_py"].append(sum(f[2] for f in fs))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(run, DECODED_SCHEMA)
+    """Re-parse the point MVT binaries and aggregate what they CONTAIN:
+    feature count, id range, coordinate sums."""
+    return _decode_stats(
+        tiles, DECODED_SCHEMA, decode_point_tile,
+        lambda fs: (
+            len(fs), min(f[0] for f in fs), max(f[0] for f in fs),
+            sum(f[1] for f in fs), sum(f[2] for f in fs),
+        ),
+    )
 
 
 POLY_DECODED_SCHEMA = (
@@ -466,31 +398,8 @@ def decode_poly_stats(tiles: DataFrame) -> DataFrame:
     (cumulative deltas and all) and aggregate the absolute ring vertices
     the bytes encode — the oracle re-derives the same quantities from
     the quantization formula, so a delta/winding/wire bug mismatches."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "n_vertices", "min_id",
-                "max_id", "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_poly_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                verts = [v for _, rings in fs for ring in rings for v in ring]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["n_vertices"].append(len(verts))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(v[0] for v in verts))
-                out["sum_py"].append(sum(v[1] for v in verts))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, POLY_DECODED_SCHEMA
+    return _decode_stats(
+        tiles, POLY_DECODED_SCHEMA, decode_poly_tile, lambda fs: _path_stats(fs, False)
     )
 
 
@@ -507,32 +416,8 @@ def decode_line_stats(tiles: DataFrame) -> DataFrame:
     absolute vertices the bytes encode — the oracle re-derives the same
     quantities from the quantization + run-split windows, so a delta,
     part-boundary, or wire bug mismatches on values."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "n_parts", "n_vertices",
-                "min_id", "max_id", "sum_px", "sum_py", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_line_tile(bytes(payload))
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                verts = [v for _, parts in fs for part in parts for v in part]
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["n_parts"].append(sum(len(parts) for _, parts in fs))
-                out["n_vertices"].append(len(verts))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_px"].append(sum(v[0] for v in verts))
-                out["sum_py"].append(sum(v[1] for v in verts))
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
-
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, LINE_DECODED_SCHEMA
+    return _decode_stats(
+        tiles, LINE_DECODED_SCHEMA, decode_line_tile, lambda fs: _path_stats(fs, True)
     )
 
 
@@ -557,8 +442,8 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
     re-encoded); attr-less children produce byte-identical attr-less
     parents.
 
-    Scale shape: ONE exchange per level (groupBy parent tile, <= 4 rows
-    per group); decode/encode run where the rows land via applyInPandas.
+    Scale shape: ONE exchange per level (hash on the parent tile, <= 4
+    rows per group); decode/encode run where the rows land.
     """
     if levels < 1:
         raise ValueError(f"levels must be >= 1, got {levels}")
@@ -579,18 +464,9 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
         rows.sort(key=lambda r: r[:3])
         feats = [(f, x, y) for f, x, y, _ in rows]
         attrs = [a for *_, a in rows]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.ptx.iloc[0])],
-                "tile_y": [int(pdf.pty.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [
-                    encode_point_tile(
-                        feats, layer, extent,
-                        attrs=attrs if any(attrs) else None,
-                    )
-                ],
-            }
+        return _tile_frame(
+            pdf.ptx.iloc[0], pdf.pty.iloc[0], len(feats),
+            encode_point_tile(feats, layer, extent, attrs=attrs if any(attrs) else None),
         )
 
     out = tiles
@@ -602,7 +478,7 @@ def rollup_point_tiles(tiles: DataFrame, levels: int = 1, layer: str = "points")
             F.shiftright("tile_x", 1).alias("ptx"),
             F.shiftright("tile_y", 1).alias("pty"),
         )
-        out = _batched_group_apply(parented, ["ptx", "pty"], build)
+        out = _encode_tiles(parented, build, keys=("ptx", "pty"))
     return out
 
 
@@ -619,30 +495,17 @@ def decode_attr_stats(tiles: DataFrame, int_key: str, str_key: str) -> DataFrame
     string attribute — so a dictionary-index, value-typing, or tag-pair
     bug mismatches against the oracle's relational re-derivation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "tile_x", "tile_y", "n_features", "min_id", "max_id",
-                "sum_attr", "n_cats", "max_cat", "extent",
-            )}
-            for tx, ty, payload in zip(b["tile_x"], b["tile_y"], b["mvt"]):
-                d = decode_point_tile(bytes(payload), with_attrs=True)
-                (layer,) = d["layers"]
-                fs = layer["features"]
-                cats = sorted({f[3][str_key] for f in fs if str_key in f[3]})
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["n_features"].append(len(fs))
-                out["min_id"].append(min(f[0] for f in fs))
-                out["max_id"].append(max(f[0] for f in fs))
-                out["sum_attr"].append(sum(f[3].get(int_key, 0) for f in fs))
-                out["n_cats"].append(len(cats))
-                out["max_cat"].append(cats[-1] if cats else None)
-                out["extent"].append(int(layer["extent"]))
-            yield pd.DataFrame(out)
+    def stats(fs) -> tuple:
+        cats = sorted({f[3][str_key] for f in fs if str_key in f[3]})
+        return (
+            len(fs), min(f[0] for f in fs), max(f[0] for f in fs),
+            sum(f[3].get(int_key, 0) for f in fs),
+            len(cats), cats[-1] if cats else None,
+        )
 
-    return tiles.select("tile_x", "tile_y", "mvt").mapInPandas(
-        run, ATTR_DECODED_SCHEMA
+    return _decode_stats(
+        tiles, ATTR_DECODED_SCHEMA,
+        lambda b: decode_point_tile(b, with_attrs=True), stats,
     )
 
 
@@ -677,18 +540,8 @@ def encode_ring_poly_tiles(
     exactly what clip-buffer payloads require; producers simplify rings
     first (operators/simplify) to bound it."""
     p = tms.zoom_params(zoom)
-    srid = tms.crs().as_srid()
-    if srid == 3857:
-        to_x = lambda c: mercator_x(c)  # noqa: E731
-        to_y = lambda c: mercator_y(c)  # noqa: E731
-    elif srid == 4326:
-        to_x = to_y = F.col  # noqa: E731
-    else:
-        raise ValueError(
-            f"encode_ring_poly_tiles supports EPSG:3857/4326, got {tms.crs()}"
-        )
-    span_x = p.resolution * float(p.tile_width)
-    span_y = p.resolution * float(p.tile_height)
+    to_x, to_y = lonlat_to_grid(tms, "encode_ring_poly_tiles")
+    qx, qy = _quantizer(p, extent, clamp=False)
 
     v = vertices.select(
         F.col(id_col).alias("fid"),
@@ -710,23 +563,13 @@ def encode_ring_poly_tiles(
         "fid",
         "ring",
         "vert",
-        F.floor(
-            ((to_x(F.col("_lon")) - F.lit(p.origin_x)) / F.lit(span_x) - F.col("tile_x"))
-            * F.lit(float(extent))
-        ).cast("int").alias("px"),
-        F.floor(
-            ((F.lit(p.origin_y) - to_y(F.col("_lat"))) / F.lit(span_y) - F.col("tile_y"))
-            * F.lit(float(extent))
-        ).cast("int").alias("py"),
+        qx(to_x(F.col("_lon"))).alias("px"),
+        qy(to_y(F.col("_lat"))).alias("py"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_vertices_per_tile:
-            raise ValueError(
-                f"tile ({pdf.tile_x.iloc[0]},{pdf.tile_y.iloc[0]}) has "
-                f"{len(pdf)} vertices > max_vertices_per_tile="
-                f"{max_vertices_per_tile} — simplify rings before encoding"
-            )
+        _check_cap(pdf, max_vertices_per_tile, "vertices",
+                   "max_vertices_per_tile", "simplify rings before encoding")
         pdf = pdf.sort_values(["fid", "ring", "vert"])
         feats = []
         for fid, g in pdf.groupby("fid", sort=True):
@@ -735,16 +578,12 @@ def encode_ring_poly_tiles(
                 for _, r in g.groupby("ring", sort=True)
             ]
             feats.append((int(fid), rings))
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf.tile_x.iloc[0])],
-                "tile_y": [int(pdf.tile_y.iloc[0])],
-                "n_features": [len(feats)],
-                "mvt": [encode_poly_tile(feats, layer, extent)],
-            }
+        return _tile_frame(
+            pdf.tile_x.iloc[0], pdf.tile_y.iloc[0], len(feats),
+            encode_poly_tile(feats, layer, extent),
         )
 
-    return _batched_group_apply(rows, ["tile_x", "tile_y"], build)
+    return _encode_tiles(rows, build)
 
 
 def tiles_for_viewport(
@@ -770,8 +609,6 @@ def tiles_for_viewport(
     covers more than 4096 tiles — that means the caller wants a lower
     zoom, not a bigger scan. The guard stops enumerating at tile 4097,
     so an oversized request costs no more than an admitted one."""
-    from ..functions.grid_cols import tile_key
-
     cap = 4096
     cover = list(
         islice(tms.tiles(west, south, east, north, [zoom], truncate=False), cap + 1)

@@ -14,6 +14,10 @@ median tile. Three tools, composable:
    partial-on-(tile, salt) -> final-on-tile, which bounds any single
    task's group size regardless of skew.
 
+`batched_key_map` is the per-key Python map every tile producer shares
+(raster painting, MVT encoding, path simplification): one hash exchange
+on the key, many whole groups per Arrow batch.
+
 AQE's skew-join splitting stays on (plans/session.py) and handles join
 sides; salting here is for aggregation/rasterization groups where AQE
 cannot split a single key.
@@ -21,6 +25,10 @@ cannot split a single key.
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -133,3 +141,58 @@ def salted_tile_agg(
     return partial.groupBy(*keys).agg(
         *[f.alias(k) for k, (_, f) in aggs.items()]
     )
+
+
+def batched_key_map(
+    df: DataFrame,
+    keys: tuple[str, ...] | list[str],
+    block: Callable[[pd.DataFrame], pd.DataFrame],
+    schema,
+    order: tuple[str, ...] = (),
+) -> DataFrame:
+    """Per-key Python map with MANY key groups per Arrow batch.
+
+    One hash exchange (`repartition(*keys)`, the exchange any per-key
+    sink needs), a partition sort on (keys..., order...), then
+    mapInPandas calling `block(pdf)` on runs of WHOLE groups: `pdf`
+    holds one or more complete groups, each contiguous and sorted by
+    `order`. `block` returns the output rows (`schema`); an empty frame
+    emits nothing.
+
+    groupBy().applyInPandas pays tens of ms of dispatch and Arrow
+    overhead per GROUP, which dominates when groups are small (measured:
+    1500 single-row z10 tiles took ~8 s; 1.7-2.5x on the simplify
+    bench). Rows of the LAST key in each Arrow batch are held back and
+    prepended to the next batch, so a group split across a batch
+    boundary is never mapped twice: keys are contiguous within a
+    partition after the sort, and mapInPandas iterates one partition's
+    batches in order.
+    """
+    keys = list(keys)
+
+    def run(batches):
+        carry = None
+        for b in batches:
+            if carry is not None and len(carry):
+                b = pd.concat([carry, b], ignore_index=True)
+            carry = None
+            if len(b) == 0:
+                continue
+            tail = np.ones(len(b), dtype=bool)
+            for k in keys:
+                tail &= (b[k] == b[k].iloc[-1]).to_numpy()
+            carry = b[tail]
+            body = b[~tail]
+            if len(body):
+                out = block(body)
+                if len(out):
+                    yield out
+        if carry is not None and len(carry):
+            out = block(carry)
+            if len(out):
+                yield out
+
+    parts = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(
+        *keys, *order
+    )
+    return parts.mapInPandas(run, schema)
