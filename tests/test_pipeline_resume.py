@@ -68,7 +68,7 @@ class TestPipelineResume:
         assert set(second["mvt_pyramid"].ran_units) == {"z1", "z2", "z3"}
         assert second["mvt"].rows > 0 and second["mvt_pyramid"].rows > 0
 
-    def test_third_run_skips_serving_leg(self, crash_then_resume, spark):
+    def test_third_run_skips_serving_leg(self, crash_then_resume, spark, count_jobs):
         # the flagship story is ONE resumable job through to served
         # tiles: a rerun after full completion must skip the MVT encode
         # and pyramid rollup byte-identically, like every other stage
@@ -79,9 +79,14 @@ class TestPipelineResume:
             for f in os.listdir(mvt_dir)
             if f.endswith(".parquet")
         }
-        third = run_pipeline(
-            spark, out, rows=1500, zooms=list(range(0, 5)), verbose=False
+        third, jobs = count_jobs(
+            lambda: run_pipeline(
+                spark, out, rows=1500, zooms=list(range(0, 5)), verbose=False
+            )
         )
+        # the lineage log is read on the driver: the only jobs left are
+        # the eager schema reads of the ingest and assign outputs
+        assert jobs <= 2, jobs
         assert third["mvt"].ran_units == []
         assert third["mvt"].skipped_units == ["z4"]
         assert third["mvt_pyramid"].ran_units == []
@@ -121,3 +126,15 @@ class TestPipelineResume:
             .collect()
         )
         assert dup == [], dup
+
+    def test_lineage_fingerprints_match_read_back(self, crash_then_resume, spark):
+        # the (row_count, fingerprint) observed during each unit's write is
+        # the one an independent pass over the written output computes
+        out, _, second, _, _ = crash_then_resume
+        from tile_grid_spark.plans.lineage import dataset_fingerprint
+
+        rows = second["_log"].summary().collect()
+        assert len(rows) == 21
+        for r in rows:
+            back = spark.read.parquet(os.path.join(out, r.stage, f"unit={r.unit}"))
+            assert (r.row_count, r.fingerprint) == dataset_fingerprint(back)[:2], (r.stage, r.unit)

@@ -5,16 +5,23 @@ Model: a pipeline is a sequence of named stages over a partitioned key
 domain (default: zoom). Each stage run:
 
   1. plans the set of work units (key values) it must produce
-  2. anti-joins the units already recorded COMPLETE in the stage's
-     `_lineage` table (resume = skip them)
-  3. computes + writes each pending unit's output atomically
-     (write to `_tmp-<unit>` then rename into place)
-  4. appends a lineage row: stage, unit, row_count, input_fingerprint,
-     wall seconds, task-partition breakdown
+  2. reads the stage's `_lineage` log on the driver (pyarrow, no Spark
+     job) and skips the units already recorded COMPLETE (resume)
+  3. writes each pending unit atomically (write to `_tmp-<unit>`, then
+     rename into place); the write is the unit's only Spark action: its
+     row count and fingerprint are observed (`DataFrame.observe`) on the
+     rows as they are written, so nothing is read back
+  4. appends one lineage row -- stage, unit, row_count, fingerprint,
+     n_partitions (the number of `part-*` files the write produced),
+     wall seconds, end time -- as one single-row parquet file, written
+     by pyarrow under a `.`-prefixed name and renamed into place, so a
+     reader never sees a half-written row
 
-The lineage table is plain parquet next to the stage output, so any Spark
-session (or DuckDB) can audit it. Fingerprints are order-insensitive
-xxhash64 XOR-folds, cheap enough to compute inline with the write.
+The lineage log is plain parquet next to the stage output, so any Spark
+session (or DuckDB) can audit it; Spark and pyarrow both skip `_`/`.`
+entries, such as the `_SUCCESS` and `.crc` sidecars of a log that Spark
+appended to. Fingerprints are order-insensitive xxhash64 XOR-folds;
+`dataset_fingerprint` computes the same pair from a read-back.
 """
 
 from __future__ import annotations
@@ -22,14 +29,26 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "stage STRING, unit STRING, status STRING, row_count BIGINT, "
     "fingerprint BIGINT, n_partitions INT, wall_sec DOUBLE, ts DOUBLE"
+)
+# LINEAGE_SCHEMA as pyarrow writes it: a file with another physical type
+# (INT64 n_partitions, say) would break Spark's read of the whole log
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("stage", pa.string()), ("unit", pa.string()), ("status", pa.string()),
+        ("row_count", pa.int64()), ("fingerprint", pa.int64()),
+        ("n_partitions", pa.int32()), ("wall_sec", pa.float64()), ("ts", pa.float64()),
+    ]
 )
 
 
@@ -59,25 +78,34 @@ class LineageLog:
         self.path = os.path.join(root, "_lineage")
 
     def completed_units(self, stage: str) -> set[str]:
-        if not os.path.exists(self.path):
+        """Units of `stage` logged COMPLETE, read on the driver; a log with
+        no visible part file (absent, or only a crashed append's
+        `_temporary/`) has none."""
+        if not os.path.isdir(self.path):
             return set()
-        df = self.spark.read.parquet(self.path)
-        rows = (
-            df.filter((F.col("stage") == stage) & (F.col("status") == "complete"))
-            .select("unit")
-            .distinct()
-            .collect()
-        )
-        return {r.unit for r in rows}
+        done = set()
+        for name in os.listdir(self.path):
+            if name.startswith((".", "_")):
+                continue
+            t = pq.read_table(os.path.join(self.path, name), columns=["stage", "unit", "status"])
+            for row in t.to_pylist():
+                if row["stage"] == stage and row["status"] == "complete":
+                    done.add(row["unit"])
+        return done
 
     def record(self, stage: str, unit: str, row_count: int, fingerprint: int,
                n_partitions: int, wall_sec: float) -> None:
-        row = [(stage, unit, "complete", row_count, fingerprint, n_partitions,
-                wall_sec, time.time())]
-        self.spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append").parquet(self.path)
+        row = [stage, unit, "complete", row_count, fingerprint, n_partitions,
+               wall_sec, time.time()]
+        table = pa.Table.from_pylist([dict(zip(_ARROW_SCHEMA.names, row))], schema=_ARROW_SCHEMA)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def summary(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
 
 @dataclass
@@ -97,7 +125,12 @@ def run_stage(
     out_root: str | None = None,
 ) -> StageResult:
     """Execute a stage resumably: skip COMPLETE units, write pending units
-    atomically, log lineage per unit."""
+    atomically, log lineage per unit.
+
+    The write is each unit's only Spark action: its row count and
+    fingerprint (equal to `dataset_fingerprint` of the written output)
+    are observed during the write, and the logged `n_partitions` is the
+    number of `part-*` files it produced."""
     out_root = out_root or os.path.join(log.root, stage)
     os.makedirs(out_root, exist_ok=True)
     done = log.completed_units(stage)
@@ -112,9 +145,15 @@ def run_stage(
         tmp = os.path.join(out_root, f"_tmp-{unit}")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        written = spark.read.parquet(tmp)
-        n, fp, nparts = dataset_fingerprint(written)
+        obs = Observation()
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("fp"),
+        ).write.mode("overwrite").parquet(tmp)
+        seen = obs.get
+        n, fp = int(seen["n"]), int(seen["fp"] or 0)
+        nparts = sum(f.startswith("part-") for f in os.listdir(tmp))
         if os.path.exists(final_path):
             shutil.rmtree(final_path)
         os.replace(tmp, final_path)
